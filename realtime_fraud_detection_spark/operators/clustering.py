@@ -24,15 +24,31 @@ each round, so rounds ≈ log2(diameter) — measured on the sf0.1 simhash
 pair graph: 8 rounds → 4, and each saved round is a full edge-table
 shuffle at scale.
 
-The driver-side convergence loop is the standard shape for iterative
-graph algorithms on Spark (MLlib does the same): per round the driver
-sees ONE scalar (the changed-vertex count) — no data is collected.
+Size gate: the distributed loop's cost on a small graph is not executor
+work. Each round is several AQE stage jobs plus a convergence action,
+and every job pays the scheduler's fixed cost (the job floor, 156-334 ms
+on a 4-core VM) whatever its size, so the bill is job floor × jobs per
+round × rounds: entity_link_rings over a 14.7k-row table ran ~115 jobs
+and ~11 s, nearly all of it scheduling. Under `_LOCAL_CC_EDGES`
+symmetric edges the edge table is collected once through Arrow and
+labelled on the driver with numpy (:func:`_min_label_index`) — no
+per-round jobs, no per-round checkpoints — the same trade
+`similarity._LOCAL_FIT_CELLS` makes for k-means. Both sides of the gate
+return identical rows and schema: min-id labels, isolated `vertices`
+added, null endpoints dropped (pinned by tests/test_clustering.py and
+tests/test_fraud_rings.py on each side).
+
+Above the gate the driver-side convergence loop is the standard shape
+for iterative graph algorithms on Spark (MLlib does the same): per round
+the driver sees ONE scalar (the changed-vertex count) — no data is
+collected.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType, StructType
 
 from ..functions.hashing import md5_bigint
 from .scaling import (
@@ -41,6 +57,19 @@ from .scaling import (
     edge_storage_level,
     scaled_shuffle,
 )
+
+# Driver-side solve gate: graphs with FEWER symmetric edges (each input
+# edge counts twice) than this are labelled on the driver. Read at call
+# time, so 0 forces the distributed path. Measured on a 4-core VM (job
+# floor ~250 ms), random graphs of avg degree 4, build + first action:
+#   symmetric edges   100k    1M     5M     10M
+#   driver solve      0.8s   1.9s   8.1s   18.1s   (4 jobs)
+#   distributed       7.0s  19.8s  84.0s   75.1s   (76-125 jobs)
+# No crossover up to 10M: the distributed side is ~rounds x jobs x floor
+# there, and the driver side grows linearly (~1.7 s per 1M), so the lines
+# meet well above 10M. The gate sits at 5M for driver memory instead:
+# the solve holds the whole edge table in Python, ~390 MB peak at 5M.
+_LOCAL_CC_EDGES = 5_000_000
 
 
 def connected_components(
@@ -57,46 +86,136 @@ def connected_components(
     Returns (doc, cluster) where `cluster` is the MINIMUM vertex id in the
     component — deterministic, and directly usable as the survivor id.
     `vertices` (optional) adds isolated vertices, which come back as
-    singleton components labelled with their own id.
+    singleton components labelled with their own id. Null endpoints and
+    null vertex ids link nothing and are not returned; the other endpoint
+    of a half-null edge is.
 
-    Each round: symmetrized edges join the current labels on the source
-    (one shuffle on the edge key), neighbor labels min-aggregate per
-    destination (map-side combine), and the label table updates via a
-    left join. Label tables are localCheckpoint'd per round — iterative
-    lineage otherwise grows exponentially and replans every round.
+    The symmetrized edge table is checkpointed and counted once. Integral
+    ids under the `_LOCAL_CC_EDGES` gate are labelled on the driver
+    (:func:`_cc_local`); above it, each round joins the edges to the
+    current labels on the source (one shuffle on the edge key), neighbor
+    labels min-aggregate per destination (map-side combine), and the
+    label table updates via a left join. Label tables are
+    localCheckpoint'd per round — iterative lineage otherwise grows
+    exponentially and replans every round. Both paths return the same
+    rows with the same schema; every checkpoint but the returned label
+    generation is freed before returning.
     """
     sym = edges.select(
         F.col(src_col).alias("src"), F.col(dst_col).alias("dst")
     ).union(edges.select(F.col(dst_col).alias("src"), F.col(src_col).alias("dst")))
-    sym = sym.localCheckpoint()
-    n_edges = sym.count()
+    spark = sym.sparkSession
+    sym_chain = RollingCheckpoint(spark)
+    # the edge count rides the eager checkpoint's own action as an
+    # observed metric: a separate count() is two more jobs
+    seen = Observation()
+    sym = sym_chain.roll(
+        sym.observe(seen, F.count(F.lit(1)).alias("n")), eager=True
+    )
+    n_edges = seen.get["n"]
 
-    # size the per-round shuffles from the edge count, not the session
-    # default (operators/scaling.py) — every round's join + min-aggregate
-    # carries edge-proportional state, and every round materializes inside
-    # this block, so the scaled conf covers all the heavy stages
-    with scaled_shuffle(sym.sparkSession, n_edges) as parts:
-        labels = (
-            sym.select(F.col("src").alias("doc"))
-            .distinct()
-            .select("doc", F.col("doc").alias("cluster"))
-        )
-        if vertices is not None:
-            # UNION, not replace: the label table must keep every edge
-            # endpoint or propagation through vertices absent from `vertices`
-            # silently stops (bipartite entity-link graphs hit this — the
-            # dedup callers always passed a superset, which masked it)
-            vcol = vertex_col or vertices.columns[0]
-            labels = (
-                labels.select("doc")
-                .union(vertices.select(F.col(vcol).alias("doc")))
-                .distinct()
-                .select("doc", F.col("doc").alias("cluster"))
+    docs = sym.select(F.col("src").alias("doc"))
+    if vertices is not None:
+        # UNION, not replace: the label table must keep every edge
+        # endpoint or propagation through vertices absent from `vertices`
+        # silently stops (bipartite entity-link graphs hit this — the
+        # dedup callers always passed a superset, which masked it)
+        vertices = vertices.select(F.col(vertex_col or vertices.columns[0]).alias("doc"))
+        docs = docs.union(vertices)
+    labels = docs.distinct().select("doc", F.col("doc").alias("cluster"))
+
+    try:
+        if n_edges < _LOCAL_CC_EDGES and isinstance(
+            labels.schema["doc"].dataType, IntegralType
+        ):
+            return _cc_local(sym, labels.schema, vertices)
+        # size the per-round shuffles from the edge count, not the session
+        # default (operators/scaling.py) — every round's join + min-aggregate
+        # carries edge-proportional state, and every round materializes inside
+        # this block, so the scaled conf covers all the heavy stages
+        with scaled_shuffle(spark, n_edges) as parts:
+            label_chain = RollingCheckpoint(spark)
+            labels = label_chain.roll(labels, eager=True)
+            return _cc_propagate(
+                sym, labels, n_edges, max_rounds, contract_threshold, parts,
+                label_chain, sym_chain,
             )
-        labels = labels.localCheckpoint()
-        return _cc_propagate(
-            sym, labels, n_edges, max_rounds, contract_threshold, parts
-        )
+    finally:
+        # the returned labels never read the edge table again
+        sym_chain.free_all()
+
+
+def _cc_local(
+    sym: DataFrame, schema: StructType, vertices: DataFrame | None
+) -> DataFrame:
+    """Driver-side components of a symmetrized edge table under the
+    `_LOCAL_CC_EDGES` gate: one Arrow collect, numpy min-label hooking,
+    the labels handed back through `createDataFrame`. `vertices` (a
+    one-column `doc` frame) stays on the executors, so the driver never
+    holds more than the gated edge table: its ids that no edge touches
+    join on as self-labelled singletons, and the result is checkpointed
+    like the distributed path's — callers join it back to the frame the
+    vertices came from, and a lazy result would re-run that frame's
+    lineage inside their plan (semantic_dedup's Arrow cell kernel)."""
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.compute as pc
+
+    tbl = sym.toArrow()
+    src, dst = tbl.column("src"), tbl.column("dst")
+    # sym lists every edge both ways, so `src` alone carries every
+    # endpoint, including the non-null end of a half-null edge. Sorted
+    # ids make the smallest index of a component its smallest id; the
+    # hash lookups (index_in) are ~4x faster than np.searchsorted at 5M.
+    ids = np.sort(pc.unique(pc.drop_null(src)).to_numpy())
+    both = pc.and_(pc.is_valid(src), pc.is_valid(dst))
+    ends = pa.array(ids)
+    lab = _min_label_index(
+        *(pc.index_in(pc.filter(c, both), value_set=ends).to_numpy() for c in (src, dst)),
+        len(ids),
+    )
+    out = sym.sparkSession.createDataFrame(
+        pa.table({"doc": ids, "cluster": ids[lab]}), schema
+    )
+    if vertices is None:
+        return out
+    isolated = (
+        vertices.filter(F.col("doc").isNotNull())
+        .select(F.col("doc").cast(schema["doc"].dataType))
+        .distinct()
+        .join(out.select("doc"), "doc", "left_anti")
+    )
+    return out.union(
+        isolated.select("doc", F.col("doc").alias("cluster"))
+    ).localCheckpoint()
+
+
+def _min_label_index(a, b, n: int):
+    """Component labels of vertices 0..n-1 under edges (a[i], b[i]): the
+    smallest vertex index of each component. Min-label hooking with full
+    shortcutting, vectorised: every tree is a star whose root is its
+    minimum, each cross-tree edge hooks the larger root under the
+    smaller, then pointer jumping flattens the trees back into stars.
+    The number of trees falls every pass; edges that end up inside one
+    tree are dropped, so later passes scan only the edges still linking
+    two trees."""
+    import numpy as np
+
+    lab = np.arange(n)
+    while True:
+        la, lb = lab[a], lab[b]
+        cross = la != lb
+        if not cross.any():
+            return lab
+        a, b, la, lb = a[cross], b[cross], la[cross], lb[cross]
+        # roots only: lab[root] == root, and lo < hi keeps lab[v] <= v,
+        # so the hooks never form a cycle
+        np.minimum.at(lab, np.maximum(la, lb), np.minimum(la, lb))
+        while True:
+            up = lab[lab]
+            if np.array_equal(up, lab):
+                break
+            lab = up
 
 
 def _cc_propagate(
@@ -106,12 +225,13 @@ def _cc_propagate(
     max_rounds: int,
     contract_threshold: int,
     parts: int,
+    label_chain: RollingCheckpoint,
+    sym_chain: RollingCheckpoint,
 ) -> DataFrame:
-    # per-round chains with prompt block release (scaling.RollingCheckpoint)
-    # — labels are vertex-sized but the contracted edge tables are not,
-    # and un-freed generations accumulate rounds × table in the heap
-    label_chain = RollingCheckpoint(sym.sparkSession)
-    sym_chain = RollingCheckpoint(sym.sparkSession)
+    # per-round chains with prompt block release (scaling.RollingCheckpoint),
+    # each holding its input table as generation 0 — labels are
+    # vertex-sized but the contracted edge tables are not, and un-freed
+    # generations accumulate rounds × table in the heap
     for _ in range(max_rounds):
         neighbor_min = (
             sym.join(labels.withColumnRenamed("doc", "src"), "src")
@@ -188,6 +308,7 @@ def _cc_propagate(
             )
             n_edges = sym.count()  # materializes the new edge generation
             sym_chain.free_prev()  # previous contracted table's blocks
+    label_chain.free_all()  # nothing is returned; the caller frees the edges
     raise RuntimeError(
         f"connected_components did not converge in {max_rounds} rounds — "
         "component diameter exceeds the bound; raise max_rounds or switch "
@@ -373,8 +494,10 @@ def entity_link_rings(
     Vertex ids: actors and each entity column hash into disjoint int64
     spaces via distinctly-salted md5 (collision odds ~n²/2⁶⁰ — nil at any
     real actor count), so the bipartite graph reuses the corpus CC
-    machinery (one shuffle per round, log-bounded rounds, driver sees
-    only a scalar per round). Null entity values link nothing.
+    machinery: a driver-side solve under its size gate (a few jobs in
+    all), one shuffle per log-bounded round above it — the same rings on
+    both sides. Null entity values link nothing; an actor with no
+    non-null entity is a ring of one, and null actors are dropped.
 
     Returns (actor, ring_id, ring_actors): ring_id is the component's
     minimum vertex id (deterministic), ring_actors the DISTINCT actor
@@ -382,29 +505,30 @@ def entity_link_rings(
     """
     actor = md5_bigint(F.col(actor_col).cast("string"), salt="actor:")
     edge_frames = [
-        df.filter(F.col(c).isNotNull())
-        .select(
+        df.filter(F.col(c).isNotNull()).select(
             actor.alias("src"),
             md5_bigint(F.col(c).cast("string"), salt=f"ent:{c}:").alias("dst"),
         )
-        .distinct()
         for c in entity_cols
     ]
     edges = edge_frames[0]
     for f in edge_frames[1:]:
         edges = edges.unionByName(f)
-    actors = df.select(
-        F.col(actor_col).alias("actor"), actor.alias("doc")
-    ).distinct()
-    cc = connected_components(
-        edges, "src", "dst", vertices=actors.select("doc"), max_rounds=max_rounds
+    # one dedup over the union: the per-column salts keep the entity id
+    # spaces disjoint, so this is the union of per-column dedups
+    edges = edges.distinct()
+    actors = (
+        df.select(F.col(actor_col).alias("actor"), actor.alias("doc"))
+        .filter(F.col("doc").isNotNull())
+        .distinct()
     )
-    labeled = actors.join(cc, "doc")
-    sizes = labeled.groupBy("cluster").agg(
-        F.count_distinct("actor").alias("ring_actors")
-    )
-    return labeled.join(sizes, "cluster").select(
+    cc = connected_components(edges, "src", "dst", max_rounds=max_rounds)
+    # an actor no entity links (every entity null) is absent from `cc`:
+    # a singleton ring labelled with its own id. doc is a function of the
+    # actor, so the distinct (actor, doc) rows count the ring's actors.
+    ring = F.coalesce(F.col("cluster"), F.col("doc"))
+    return actors.join(cc, "doc", "left").select(
         F.col("actor").alias(actor_col),
-        F.col("cluster").alias("ring_id"),
-        "ring_actors",
+        ring.alias("ring_id"),
+        F.count(F.lit(1)).over(Window.partitionBy(ring)).alias("ring_actors"),
     )

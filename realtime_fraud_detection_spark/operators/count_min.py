@@ -119,14 +119,15 @@ def cm_partials(
         )
         group = [*keys, *(["hour"] if ts_col is not None else []), "depth", "col"]
         return exploded.groupBy(*group).agg(F.sum("cnt").alias("cnt"))
-    item = F.col(item_col)
-    depths, col = _depth_coords(item, depth, width)
+    # the item rides as `_cm_item`: it may also be one of the key columns,
+    # and a second copy under its own name would be ambiguous below
+    depths, col = _depth_coords(F.col("_cm_item"), depth, width)
     cols = [*keys]
     if ts_col is not None:
         cols.append(F.date_trunc(grain, F.col(ts_col)).alias("hour"))
     exploded = (
-        df.filter(item.isNotNull())
-        .select(*cols, depths.alias("_cm_depth"), F.col(item_col))
+        df.filter(F.col(item_col).isNotNull())
+        .select(*cols, depths.alias("_cm_depth"), F.col(item_col).alias("_cm_item"))
         .select(*keys,
                 *(["hour"] if ts_col is not None else []),
                 F.col("_cm_depth").alias("depth"),

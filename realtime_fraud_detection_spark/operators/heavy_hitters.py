@@ -112,11 +112,25 @@ def frequent_items_partials(
 
     `counts=` (the shared-table pattern of quality's `words=`) accepts a
     precomputed exact (key…, hour, item, cnt) frame — null items already
-    dropped, `hour` at `grain` — so a caller building several sketches
-    from the same counts (count_brackets: MG + CM + the probe list) pays
-    the events scan and the count shuffle ONCE."""
+    dropped, `hour` at a grain no coarser than `grain` — so a caller
+    building several sketches from the same counts (count_brackets: MG +
+    CM + the probe list) pays the events scan and the count shuffle ONCE.
+    `hour` is re-truncated to `grain` and the counts re-summed, as
+    `count_min.cm_partials(counts=)` does, so an hour-grain count table
+    feeds a day-grain summary directly."""
     keys = key_cols or []
-    if counts is None:
+    if counts is not None:
+        # shuffled on the compression's window key, which the re-sum's
+        # clustering also accepts: one exchange serves both
+        counts = (
+            counts.select(
+                *keys, F.date_trunc(grain, F.col("hour")).alias("hour"), "item", "cnt"
+            )
+            .repartition(*keys, "hour")
+            .groupBy(*keys, "hour", "item")
+            .agg(F.sum("cnt").alias("cnt"))
+        )
+    else:
         counts = (
             df.filter(F.col(item_col).isNotNull())
             .select(

@@ -94,6 +94,11 @@ class RollingCheckpoint:
         while len(self._gens) > 1:
             _unpersist_rdd_ids(self._spark, self._gens.pop(0))
 
+    def free_all(self) -> None:
+        """Free every generation (call once nothing reads the chain)."""
+        while self._gens:
+            _unpersist_rdd_ids(self._spark, self._gens.pop(0))
+
 
 # above ~20M rows an edge-table checkpoint competes with the execution
 # pool for heap (observed: the 100x probes' flaky graph-stage OOMs) —

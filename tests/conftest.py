@@ -55,6 +55,37 @@ def drain_stream(spark):
     return _drain
 
 
+@pytest.fixture
+def cc_path(request, monkeypatch):
+    """Pin a connected-components test to one side of the driver-solve
+    gate (operators/clustering._LOCAL_CC_EDGES): "local" unless the test
+    parametrizes it indirectly with "distributed". The path not taken is
+    replaced by a stub that fails, so a test cannot pass on the wrong
+    one."""
+    from realtime_fraud_detection_spark.operators import clustering as C
+
+    path = getattr(request, "param", "local")
+
+    def _wrong_path(*args, **kwargs):
+        raise AssertionError(f"left the {path} path")
+
+    if path == "local":
+        monkeypatch.setattr(C, "_LOCAL_CC_EDGES", 1_000_000)
+        monkeypatch.setattr(C, "_cc_propagate", _wrong_path)
+    else:
+        monkeypatch.setattr(C, "_LOCAL_CC_EDGES", 0)
+        monkeypatch.setattr(C, "_cc_local", _wrong_path)
+    return path
+
+
+def run_with_fixtures(request, case):
+    """Call test function `case` with its fixtures resolved in the calling
+    test — how a test reruns others under a different `cc_path`."""
+    import inspect
+
+    case(**{p: request.getfixturevalue(p) for p in inspect.signature(case).parameters})
+
+
 @pytest.fixture(scope="session")
 def duck():
     import duckdb

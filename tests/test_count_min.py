@@ -184,3 +184,27 @@ def test_count_brackets_contain_truth(spark):
             r["item"], r["cnt_lb"], true, r["cnt_ub"],
         )
         assert r["cnt_ub"] - r["cnt_lb"] <= r["n"], r["item"]
+
+
+def test_item_column_may_also_be_a_key(spark):
+    """item_col listed in key_cols too (per-user sketches of the user's
+    own id): no duplicate or ambiguous column, and the same grid as the
+    counts= path built from the exact per-(user, hour, item) counts."""
+    ev = _events(spark)
+    direct = cm_partials(ev, "user_id", ts_col="ts", key_cols=["user_id"])
+    counts = (
+        ev.filter(F.col("user_id").isNotNull())
+        .groupBy(
+            "user_id",
+            F.date_trunc("hour", "ts").alias("hour"),
+            F.col("user_id").alias("item"),
+        )
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    shared = cm_partials(
+        ev, "user_id", ts_col="ts", key_cols=["user_id"], counts=counts
+    )
+    assert direct.columns == ["user_id", "hour", "depth", "col", "cnt"]
+    assert shared.columns == direct.columns
+    rows = {tuple(r) for r in direct.collect()}
+    assert rows and rows == {tuple(r) for r in shared.collect()}

@@ -1,14 +1,18 @@
 """Shared-entity fraud-ring detection (clustering.entity_link_rings):
 hand-built transaction graph with known rings, transitive linking across
-DIFFERENT entity types, null handling, and a generator-fixture smoke."""
+DIFFERENT entity types, null handling, and a generator-fixture smoke.
+Tests taking `cc_path` run on both sides of the driver-solve gate."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
+from realtime_fraud_detection_spark.operators import clustering as C
 from realtime_fraud_detection_spark.operators.clustering import (
     entity_link_rings,
 )
+from tests.conftest import run_with_fixtures
 
 TX = [
     # ring 1: alice—bob share device d1; bob—carol share ip 9.9.9.9
@@ -35,7 +39,7 @@ def _rings(spark, rows):
     return {frozenset(v) for v in by_ring.values()}, sizes
 
 
-def test_known_rings_with_cross_entity_transitivity(spark):
+def test_known_rings_with_cross_entity_transitivity(spark, cc_path):
     rings, sizes = _rings(spark, TX)
     assert rings == {
         frozenset({"alice", "bob", "carol"}),
@@ -47,14 +51,27 @@ def test_known_rings_with_cross_entity_transitivity(spark):
     }
 
 
-def test_deterministic_ring_ids(spark):
+def test_unlinked_and_null_actors(spark, cc_path):
+    """An actor whose every entity is null is a ring of one; a null actor
+    links nothing and gets no row."""
+    rings, sizes = _rings(spark, TX + [("gina", None, None), (None, "d1", "1.1.1.1")])
+    assert rings == {
+        frozenset({"alice", "bob", "carol"}),
+        frozenset({"dave", "erin"}),
+        frozenset({"frank"}),
+        frozenset({"gina"}),
+    }
+    assert sizes["gina"] == 1 and None not in sizes
+
+
+def test_deterministic_ring_ids(spark, cc_path):
     df = spark.createDataFrame(TX, "user string, device string, ip string")
     a = sorted(map(tuple, entity_link_rings(df, "user", ["device", "ip"]).collect()))
     b = sorted(map(tuple, entity_link_rings(df, "user", ["device", "ip"]).collect()))
     assert a == b
 
 
-def test_generator_fixture_smoke(spark, fraud_data):
+def test_generator_fixture_smoke(spark, fraud_data, cc_path):
     """Every user gets exactly one ring row; shared random device_ids make
     rings real but the invariants (partition of users, size consistency)
     hold regardless of the draw."""
@@ -102,3 +119,47 @@ def test_variants_agree_on_bipartite_graph(spark):
     a = {(r["doc"], r["cluster"]) for r in connected_components(edges, "src", "dst", vertices=verts).collect()}
     b = {(r["doc"], r["cluster"]) for r in connected_components_star(edges, "src", "dst", vertices=verts).collect()}
     assert a == b
+
+
+def test_paths_agree_on_generator_fixture(spark, fraud_data, monkeypatch):
+    _, _, tx = fraud_data
+    runs = []
+    for gate in (1_000_000, 0):
+        monkeypatch.setattr(C, "_LOCAL_CC_EDGES", gate)
+        out = entity_link_rings(tx, "user_id", ["device_id", "ip_address"])
+        runs.append((out.schema, sorted(map(tuple, out.collect()))))
+    assert runs[0] == runs[1]
+
+
+def test_ring_linking_job_budget(spark, fraud_data):
+    """Under the default gate, building and running entity_link_rings on
+    the generator fixture schedules at most 15 Spark jobs (the
+    distributed path needs ~100: several jobs per min-label round)."""
+    _, _, tx = fraud_data
+    tx.count()  # the fixture's cache fills outside the counted group
+    sc = spark.sparkContext
+    sc.setJobGroup("ring-job-budget", "entity_link_rings job budget")
+    try:
+        entity_link_rings(tx, "user_id", ["device_id", "ip_address"]).write.format(
+            "noop"
+        ).mode("overwrite").save()
+    finally:
+        sc._jsc.clearJobGroup()
+    assert len(sc.statusTracker().getJobIdsForGroup("ring-job-budget")) <= 15
+
+
+@pytest.mark.parametrize("cc_path", ["distributed"], indirect=True)
+@pytest.mark.parametrize(
+    "case",
+    [
+        test_known_rings_with_cross_entity_transitivity,
+        test_unlinked_and_null_actors,
+        test_deterministic_ring_ids,
+        test_generator_fixture_smoke,
+    ],
+    ids=lambda f: f.__name__,
+)
+def test_cases_on_distributed_path(request, cc_path, case):
+    """The `cc_path` tests above (pinned to the driver solve) again on
+    the distributed side of the gate."""
+    run_with_fixtures(request, case)

@@ -329,3 +329,27 @@ def test_partials_survive_parquet(spark, tmp_path):
         merge_frequent_items(df, "day", capacity=CAP).collect()
     )
     assert rolled(spark.read.parquet(p)) == rolled(parts)
+
+
+def test_counts_path_honours_grain(spark):
+    """An hour-grain `counts=` table with grain="day" is re-truncated and
+    re-summed before compression: the same summaries as a direct
+    day-grain build from the events."""
+    ev = _events(spark)
+    hourly = (
+        ev.filter(F.col("user_id").isNotNull())
+        .groupBy(
+            F.date_trunc("hour", "ts").alias("hour"),
+            F.col("user_id").alias("item"),
+        )
+        .agg(F.count(F.lit(1)).alias("cnt"))
+    )
+    shared = frequent_items_partials(
+        ev, "ts", "user_id", capacity=CAP, grain="day", counts=hourly
+    )
+    direct = frequent_items_partials(
+        ev, "ts", "user_id", capacity=CAP, grain="day"
+    )
+    assert shared.columns == direct.columns
+    want = _sorted_rows(direct.collect())
+    assert want and _sorted_rows(shared.collect()) == want
