@@ -27,6 +27,19 @@ SUSPICIOUS_HIGH_RISK = "(?i)(casino|gambling|bet|adult)"
 HIGH_RISK_CATEGORIES = ("gambling", "adult_entertainment", "jewelry")
 HIGH_RISK_PAYMENT_SUBSTRINGS = ("prepaid", "gift", "crypto", "wire")
 
+# Case-insensitive substring tests, written as ASCII `(?i)` regexes rather
+# than `lower(c).contains(n)`. Spark 4.1 routes `lower()` through ICU case
+# mapping, and the first `lower()` row in a JVM runs the static initializer
+# of `CollationAwareUTF8String`, which title-cases every code point to fill
+# a lookup table: ~2 s during which every task of the stage waits on the
+# class-init monitor. The regex gives the same answer for these needles:
+# Java `(?i)` folds ASCII only, and under ICU's root-locale lowercase the
+# only non-ASCII code points that become ASCII letters are U+212A KELVIN
+# SIGN (-> k; no needle contains k) and U+0130 (-> i + U+0307; every i in
+# a needle is followed by a letter, so that U+0307 breaks the match).
+SUSPICIOUS_USER_AGENT = "(?i)bot|crawler"
+HIGH_RISK_PAYMENT = "(?i)" + "|".join(HIGH_RISK_PAYMENT_SUBSTRINGS)
+
 
 # --------------------------------------------------------------------------
 # Amount family (FeatureExtractor.java:92-131,386-392) — 12 features
@@ -164,8 +177,8 @@ def device_features(ip: Column, user_agent: Column,
         "is_private_ip": priv,
         "ip_risk_score": F.when(priv, 0.1).otherwise(0.3),
         "suspicious_user_agent": (
-            F.lower(user_agent).contains("bot")
-            | F.lower(user_agent).contains("crawler")
+            # no lower(): see SUSPICIOUS_USER_AGENT
+            user_agent.rlike(SUSPICIOUS_USER_AGENT)
             | (F.length(user_agent) < 20)
         ),
     }
@@ -210,12 +223,9 @@ def merchant_features(name: Column, category: Column, risk_level: Column,
 # Contextual family (FeatureExtractor.java:368-382,486-493) — 5 features
 # --------------------------------------------------------------------------
 def contextual_features(payment_method: Column, transaction_type: Column) -> dict[str, Column]:
-    pm = F.lower(payment_method)
-    high_risk = F.lit(False)
-    for s in HIGH_RISK_PAYMENT_SUBSTRINGS:
-        high_risk = high_risk | pm.contains(s)
     return {
-        "is_high_risk_payment": high_risk,
+        # no lower(): see HIGH_RISK_PAYMENT
+        "is_high_risk_payment": payment_method.rlike(HIGH_RISK_PAYMENT),
         "is_refund": transaction_type == "refund",
     }
 

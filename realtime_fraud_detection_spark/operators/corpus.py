@@ -104,16 +104,18 @@ def bm25_rank(
     # consumer subtree (a DAG has no sharing across join inputs). Callers
     # running several searches over one corpus pass a prebuilt `dt`
     # (doc_term_table) so it is not rebuilt per call either.
-    if dt is None:
+    own_dt = dt is None
+    if own_dt:
         dt = doc_term_table(df, text_col, id_col).localCheckpoint(eager=False)
+    lens = dt.groupBy("doc").agg(F.sum("_tf_dt").alias("_dl"))
     # lens feeds TWO consumers (the per-doc candidate join and the corpus
     # stats aggregate) — materialize it so the groupBy(doc) pass over the
-    # doc-term blocks runs once, not per reference (r14, guide §2.4)
-    lens = (
-        dt.groupBy("doc")
-        .agg(F.sum("_tf_dt").alias("_dl"))
-        .localCheckpoint(eager=False)
-    )
+    # doc-term blocks runs once, not per reference (r14, guide §2.4). Only
+    # on a dt built here: a caller-supplied dt is reused across calls in one
+    # session, and a checkpoint per call would pile up unfreed blocks there
+    # (ADVICE r14), so those calls keep a plain lens subtree.
+    if own_dt:
+        lens = lens.localCheckpoint(eager=False)
     dft = dt.groupBy("term").agg(F.count("*").alias("_df"))
     stats = lens.agg(
         F.count("*").alias("_n_docs"), F.avg("_dl").alias("_avgdl")

@@ -12,6 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import TimestampNTZType
 
 
 def profile_enrich(
@@ -85,11 +86,17 @@ def windowed_stream_join(
     """
     w_s = _interval_seconds(before)
     a_s = _interval_seconds(after)
+    l_ntz = isinstance(left.schema[left_ts].dataType, TimestampNTZType)
+    r_ntz = isinstance(right.schema[right_ts].dataType, TimestampNTZType)
     bucketed = (
         w_s is not None and a_s is not None
         # w=0 would divide by zero in the bucket floor; the plain plan
         # handles the degenerate r_ts == l_ts join correctly (ADVICE r13)
         and max(w_s, a_s) > 0
+        # an NTZ bucket counts wall-clock time and an instant bucket counts
+        # UTC time, so across one NTZ and one instant side the buckets sit
+        # the session TZ offset apart and no pair shares one (ADVICE r14)
+        and l_ntz == r_ntz
         and not left.isStreaming and not right.isStreaming
     )
     if not bucketed:
@@ -102,7 +109,7 @@ def windowed_stream_join(
         return l.join(r, cond)
     w_us = max(w_s, a_s) * 1_000_000
 
-    def _epoch_us(df: DataFrame, ts_col: str) -> Column:
+    def _epoch_us(ts_col: str) -> Column:
         # The bucket must live in the SAME value space the range predicate
         # compares (ADVICE r13): for NTZ columns the predicate is wall-clock
         # arithmetic, so derive a wall-clock-linear epoch via timestampdiff
@@ -111,17 +118,15 @@ def windowed_stream_join(
         # and can put a within-W pair >1 bucket apart (silently dropping
         # it). Instant-typed timestamps keep unix_micros (instant-linear,
         # matching instant-space interval arithmetic).
-        from pyspark.sql.types import TimestampNTZType
-
-        if isinstance(df.schema[ts_col].dataType, TimestampNTZType):
+        if l_ntz:
             return F.expr(
                 "timestampdiff(MICROSECOND, "
                 f"TIMESTAMP_NTZ '1970-01-01 00:00:00', {ts_col})"
             )
         return F.unix_micros(F.col(ts_col).cast("timestamp"))
 
-    lb = left.withColumn("_wsj_lb", F.floor(_epoch_us(left, left_ts) / w_us))
-    rb0 = F.floor(_epoch_us(right, right_ts) / w_us)
+    lb = left.withColumn("_wsj_lb", F.floor(_epoch_us(left_ts) / w_us))
+    rb0 = F.floor(_epoch_us(right_ts) / w_us)
     rb = right.withColumn(
         "_wsj_rb", F.explode(F.array(rb0 - 1, rb0, rb0 + 1))
     )

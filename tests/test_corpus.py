@@ -116,6 +116,26 @@ def test_bm25_top_k_cap_and_multi_query(spark):
     assert len(by_q[2]) == 1 and by_q[2][0]["doc"] == 7
 
 
+def test_bm25_with_caller_dt_leaves_no_checkpoints(spark):
+    """A caller-supplied doc-term table (a session-cached corpus) is reused
+    across calls: two searches over it persist nothing new, and rank the
+    same as a call that builds its own table."""
+    from realtime_fraud_detection_spark.operators.scaling import _persistent_rdd_ids
+
+    df = spark.createDataFrame(
+        [(1, "the cat sat on the mat"), (2, "the dog sat"), (3, "a cat and a dog")],
+        "doc_id int, text string",
+    )
+    q = spark.createDataFrame([(10, "cat sat"), (11, "dog")], "q_id int, query string")
+    dt = CO.doc_term_table(df, "text", "doc_id").cache()
+    dt.count()
+    before = _persistent_rdd_ids(spark)
+    runs = [sorted(CO.bm25_rank(df, q, dt=dt).collect()) for _ in range(2)]
+    assert _persistent_rdd_ids(spark) == before
+    assert runs[0] == runs[1] == sorted(CO.bm25_rank(df, q).collect())
+    dt.unpersist()
+
+
 def test_bm25_matches_duckdb_within_tolerance(spark):
     import duckdb
     import pytest

@@ -116,3 +116,43 @@ def test_zero_window_falls_back_to_unbucketed(spark):
         .collect()
     )
     assert [(r["v"], r["w"]) for r in got] == [(1, 10)]
+
+
+def test_mixed_ntz_and_instant_sides_match_plain_join(spark):
+    """ADVICE r14 (a): one NTZ side and one instant side. An NTZ bucket
+    counts wall-clock time and an instant bucket counts UTC time, so under
+    a non-UTC session the two sides' buckets sit the TZ offset apart and
+    the bucketed join dropped every pair. Mixed families must take the
+    plain range join, whose comparison Spark resolves in the session TZ."""
+    from pyspark.sql import functions as F
+
+    prev_tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        left = spark.createDataFrame(
+            [("u1", "2024-01-01 10:00:00", 1), ("u1", "2024-01-01 12:00:00", 2),
+             ("u2", "2024-07-01 09:30:00", 3)],
+            "user_id string, ts string, v long",
+        ).withColumn("ts", F.col("ts").cast("timestamp_ntz"))
+        right = spark.createDataFrame(
+            [("u1", "2024-01-01 10:02:00", 10), ("u1", "2024-01-01 10:20:00", 20),
+             ("u1", "2024-01-01 11:58:00", 30), ("u2", "2024-07-01 09:25:00", 40)],
+            "user_id string, ts string, w long",
+        ).withColumn("ts", F.col("ts").cast("timestamp"))
+        got = (
+            windowed_stream_join(left, right, "user_id")
+            .select("v", "w")
+            .collect()
+        )
+        l, r = left.alias("l"), right.alias("r")
+        plain = l.join(
+            r,
+            (F.col("l.user_id") == F.col("r.user_id"))
+            & (F.col("r.ts") >= F.expr("l.ts - interval 5 minutes"))
+            & (F.col("r.ts") <= F.expr("l.ts + interval 5 minutes")),
+        ).select("v", "w").collect()
+        want = sorted((r["v"], r["w"]) for r in plain)
+        assert want == [(1, 10), (2, 30), (3, 40)]
+        assert sorted((r["v"], r["w"]) for r in got) == want
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev_tz)
