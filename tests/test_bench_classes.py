@@ -12,10 +12,8 @@ def test_bench_diff_shares_bench_query_classes():
     assert bench_diff.SERVE is bench.SERVE
 
 
-def test_every_classed_query_is_annotated():
-    assert bench.SERVE  # the SERVE class is not empty
+def test_serve_movers_are_annotated():
+    assert bench.SERVE
     for name in bench.SERVE:
         assert any(n.startswith("serve:") for n in bench_diff.mover_notes(name))
-    for name in bench.ITERATIVE | bench.CACHED | bench.SERVE:
-        assert bench_diff.mover_notes(name)
     assert bench_diff.mover_notes("pricing_summary") == []
